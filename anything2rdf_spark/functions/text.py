@@ -1,15 +1,15 @@
 """Text scalar kernel (SURVEY §2.4 F1-F11, F21-F27).
 
-Native Column expressions wherever possible; the two genuinely
-Python-requiring pieces (Unicode NFC, dictionary mention scan) are
-Arrow-vectorized pandas UDFs operating on whole batches — never per-row
+Native Column expressions wherever possible, Unicode NFC included (ICU in
+the JVM). The Python pieces — the dictionary mention scan above
+``AC_THRESHOLD`` surfaces and the wiki-template parser — are
+Arrow-vectorized pandas UDFs operating on whole batches, never per-row
 Python UDFs (input_hint mandate).
 """
 
 from __future__ import annotations
 
 import re
-import unicodedata
 
 import pandas as pd
 from pyspark.sql import Column
@@ -139,11 +139,16 @@ def gender_label(col: Column | str) -> Column:
     )
 
 
-@F.pandas_udf(T.StringType())
-def nfc_normalize(s: pd.Series) -> pd.Series:
-    """Unicode NFC normalization (HelmetMARC2ISBNRDF.scala:46-50) — Arrow
-    batch; pandas ``.map`` over a batch, not a per-row Spark UDF."""
-    return s.map(lambda x: unicodedata.normalize("NFC", x) if x is not None else None)
+def nfc_normalize(col: Column | str) -> Column:
+    """Unicode NFC normalization (HelmetMARC2ISBNRDF.scala:46-50) as a native
+    column: ICU's ``Normalizer.compose`` (icu4j ships in Spark's jars) via
+    ``java_method``, so no Python worker starts. NULL stays NULL; the guard
+    is required because the reflected call throws on a NULL argument."""
+    c = _c(col)
+    return F.when(
+        c.isNotNull(),
+        F.java_method(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), c, F.lit(False)),
+    )
 
 
 def norm_surface(col: Column | str) -> Column:

@@ -5,19 +5,23 @@ iterative joins — the distributed re-expression of schoenberg's in-memory
 union-find (schoenbergcsv2rdf.scala:105-168: pass-1 min-id map, path
 compression, pass-2 substitution + owl:sameAs emission).
 
-Algorithm: min-label propagation with pointer jumping. Each round
-(1) every node takes the min component label among itself and its
-neighbors, then (2) jumps to its label's label (path compression). Both are
-equi-joins; the label distance roughly doubles per round, so a chain of
-length L converges in O(log L) rounds — verified in tests on a 1000-node
-chain. Every round ends in ``localCheckpoint`` to cut lineage (SURVEY §4.2
-custom-work item 1); at cluster scale this would be an Iceberg temp-table
-checkpoint instead.
+Algorithm: min-label propagation with pointer jumping over the undirected
+edge relation, which keeps a self-loop per node. Each round (1) hooks:
+every node takes the min label among its neighbors and itself — one
+``groupBy`` that also carries the node's old label — then (2) jumps twice
+to its label's label. A chain of length L converges in O(log L) rounds
+(tests: 1000-node chain). Each round is ONE action: a ``localCheckpoint``
+that cuts lineage (SURVEY §4.2 custom-work item 1; at cluster scale an
+Iceberg temp table) and carries an ``Observation`` of changed labels and
+rows. A checkpoint has no size statistics, so AQE would sort-merge every
+join against it and switch to broadcast only after both shuffles ran; the
+label side is hinted as a broadcast while its row count is under
+``broadcast_max_rows``, the policy ``rewrite_triples`` follows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .. import NS, OWL_SAMEAS
@@ -30,7 +34,7 @@ def connected_components(
     src: str = "src_id",
     dst: str = "dst_id",
     max_iter: int = 50,
-    checkpoint: bool = True,
+    broadcast_max_rows: int = 5_000_000,
 ) -> DataFrame:
     """Edges → canonical map (node_id, canonical_id) with canonical = min id
     of the component (min-id semantics, schoenbergcsv2rdf.scala:135).
@@ -38,69 +42,53 @@ def connected_components(
     Isolated nodes (self-loops) map to themselves. Deterministic under any
     partitioning. Raises if not converged within ``max_iter`` rounds (a
     10^12-scale run would page instead)."""
+    a, b = F.col("a"), F.col("b")
+
+    def pair(x: str, y: str):
+        return F.struct(F.col(x).alias("a"), F.col(y).alias("b"))
+
+    # both directions plus a self-loop per endpoint; a NULL endpoint is a
+    # node of its own (label NULL) and never an edge to anything
     und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
+        edges.select(
+            F.explode(F.array(pair(src, dst), pair(dst, src), pair(src, src), pair(dst, dst))).alias("e")
+        )
+        .select("e.*")
+        .filter(a.eqNullSafe(b) | (a.isNotNull() & b.isNotNull()))
         .distinct()
     )
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    parent = nodes.select("node", F.col("node").alias("comp"))
-    if checkpoint:
-        und = und.localCheckpoint()
-        parent = parent.localCheckpoint()
+    obs = Observation()
+    und = und.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    # rows of the label side of the next join; |und| bounds the node count
+    n_labels = obs.get["n"]
 
-    from pyspark.sql import Observation
+    def label_side(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if n_labels <= broadcast_max_rows else df
 
+    # (a, b, cb): an edge and b's current label — in round 1, b itself
+    nbr = und.withColumn("cb", b)
     for _ in range(max_iter):
-        # (1) neighbor-min: min component label among self and neighbors.
-        # The pre-update label rides along as _old so the convergence check
-        # needs NO extra join or job.
-        nbr = (
-            und.join(parent.withColumnRenamed("node", "b"), "b")
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("comp").alias("nbr_comp"))
+        # (1) hook; _old is the node's own label, read off its self-loop
+        p = nbr.groupBy(a.alias("node")).agg(
+            F.min("cb").alias("comp"),
+            F.min(F.when(a.eqNullSafe(b), F.col("cb"))).alias("_old"),
         )
-        p1 = parent.join(nbr, "node", "left").select(
-            "node",
-            F.col("comp").alias("_old"),
-            F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
-        )
-        # (2) pointer jump: comp := comp(comp)
-        lut = p1.select(F.col("node").alias("comp"), F.col("comp").alias("comp2"))
-        p2 = p1.join(lut, "comp", "left").select(
-            "node",
-            "_old",
-            F.least("comp", F.coalesce("comp2", "comp")).alias("comp"),
-        )
-        # (3) second jump per round (round-6): label distance shrinks ~3x
-        # per round instead of ~2x, so a chain of length L converges in
-        # ~log3(L) rounds — fewer checkpoint barriers for one extra tiny
-        # equi-join per round (total join count is a wash: 3·log3 ≈ 2·log2;
-        # measured 12 -> 7 rounds and identical output on the bench graph).
-        lut2 = p2.select(F.col("node").alias("comp"), F.col("comp").alias("comp3"))
-        p2 = p2.join(lut2, "comp", "left").select(
-            "node",
-            "_old",
-            F.least("comp", F.coalesce("comp3", "comp")).alias("comp"),
-        )
-        if checkpoint:
-            # the changed-count observes the SAME job that materializes the
-            # checkpoint — one action per round, not two (per-round jobs are
-            # the wall-clock driver of the O(log L) loop at any scale)
-            obs = Observation()
-            p2o = p2.observe(obs, F.count_if(F.col("comp") != F.col("_old")).alias("chg"))
-            parent = p2o.select("node", "comp").localCheckpoint()
-            changed = obs.get["chg"]
-        else:
-            changed = p2.filter(F.col("comp") != F.col("_old")).limit(1).count()
-            parent = p2.select("node", "comp")
+        # (2) two pointer jumps: comp := comp(comp). A label never exceeds
+        # its node, so the jumped label is never larger.
+        for _jump in range(2):
+            lut = p.select(F.col("node").alias("comp"), F.col("comp").alias("_next"))
+            p = p.join(label_side(lut), "comp", "left").select(
+                "node", "_old", F.coalesce("_next", "comp").alias("comp")
+            )
+        obs = Observation()
+        chg = F.count_if(F.col("comp") != F.col("_old")).alias("chg")
+        labels = p.observe(obs, chg, F.count(F.lit(1)).alias("n")).select("node", "comp").localCheckpoint()
+        changed, n_labels = obs.get["chg"], obs.get["n"]
         if changed == 0:
-            return parent.select(F.col("node").alias("node_id"), F.col("comp").alias("canonical_id"))
+            return labels.select(F.col("node").alias("node_id"), F.col("comp").alias("canonical_id"))
+        lb = labels.select(F.col("node").alias("_b"), F.col("comp").alias("cb"))
+        # null-safe so the NULL node keeps its row through the hook
+        nbr = und.join(label_side(lb), b.eqNullSafe(F.col("_b"))).select("a", "b", "cb")
     raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 
 

@@ -10,8 +10,10 @@ semantics, Anything2RDF.scala:126-144 / SURVEY A6).
 Rule model: each emission rule is a nullable struct inside one array column;
 ``explode`` + null-filter turns a turn-row into 5-10 triple rows. All guards
 are native ``when`` expressions (ANE semantics, Anything2RDF.scala:101-107).
-Mention detection is the only Python: an Arrow-batched regex scan
-(functions.text.mention_scan_udf) — zero per-row Python.
+Mention detection is native too up to ``AC_THRESHOLD`` (256) surfaces: one
+JVM alternation scan (functions.text.mention_matches). Only a larger
+dictionary brings in Python, an Arrow-batched Aho-Corasick scan
+(functions.text.mention_scan_udf) — never per-row Python.
 """
 
 from __future__ import annotations
@@ -97,8 +99,8 @@ def extract_triples(transcripts: DataFrame, ns: str = NS, dictionary_surfaces=No
     (separator-count semantics, OBCXML2RDF.scala:210), hasSpeaker +
     speaker rdf:type + hasRole code link, usedTool (ANE guard on nullable
     tool), atTime (xsd:dateTime), conversation rdf:type, and — when a
-    dictionary is supplied — mentionsSurface triples from the Arrow-batched
-    scan (andcsv2rdf.scala:43-47 analog).
+    dictionary is supplied — mentionsSurface triples from the mention scan
+    (andcsv2rdf.scala:43-47 analog).
     """
     # Hoist every subexpression the rules share into ONE projection below
     # the explode (round-6 optimization; guide §1.2 per-task work).
@@ -211,15 +213,14 @@ def extract_mentions(transcripts: DataFrame, dictionary_surfaces) -> DataFrame:
     (see functions.text.mention_scan_udf).
 
     norm_surface is computed once per DISTINCT dictionary surface and
-    broadcast-joined back (round-6 optimization): every matched surface IS a
-    dictionary entry (the scanners emit canonical dictionary casing), so
-    running :func:`~anything2rdf_spark.functions.text.norm_surface` — whose
-    NFC step is an Arrow-batched Python UDF — per mention row put a second
-    ArrowEvalPython pass over the (much larger) mention relation for values
-    already determined by the dictionary. The tiny surface→norm table uses
-    the SAME column expression, so values are identical by construction
-    (test-pinned); the join is a broadcast hash join in the same codegen
-    stage, and the surface list is driver-resident either way."""
+    broadcast-joined back: every matched surface IS a dictionary entry (the
+    scanners emit canonical dictionary casing), so the value is determined
+    by the dictionary. :func:`~anything2rdf_spark.functions.text.norm_surface`
+    is native, but its NFC step is a reflective ICU call that Spark
+    evaluates outside whole-stage codegen; on the tiny surface→norm table
+    it stays off the mention relation, whose join is a broadcast hash join
+    in the same codegen stage. The surface list is driver-resident either
+    way."""
     mentions = admissible(transcripts).select(
         "conv_id",
         "turn_idx",
@@ -267,7 +268,9 @@ def extract_mentions_join(
     4. per turn, fold the verified candidate spans left-to-right with a
        native ``aggregate``: sort by (position, longest-first), keep a span
        when it starts at/after the cursor — exactly the scan engines'
-       leftmost-longest non-overlapping selection, in token space.
+       leftmost-longest non-overlapping selection, in token space;
+    5. normalize each distinct selected surface once (``norm_surface``) and
+       join the value back.
 
     Semantics vs the scan engines: matching is on token sequences, so it is
     punctuation/whitespace-run insensitive ("New  York" matches surface
@@ -275,8 +278,6 @@ def extract_mentions_join(
     output equals ``extract_mentions`` (test-enforced, including overlap
     cases). Output: (conv_id, turn_idx, surface, norm_surface).
     """
-    from ..functions import text as _TX
-
     surf = (
         surfaces.select(F.col(surface_col).alias("_surface"))
         .filter(F.col("_surface").isNotNull())
@@ -292,12 +293,6 @@ def extract_mentions_join(
         # the scan engines' canon-casing map, made order-independent)
         .groupBy("_skey", "_tok", "_ntok")
         .agg(F.min("_surface").alias("_surface"))
-        # norm once per distinct surface (dictionary-sized relation) instead
-        # of per selected mention: norm_surface's NFC step is a Python UDF,
-        # and the dictionary side is orders of magnitude smaller than the
-        # mention relation at scale — the value rides the candidate join and
-        # the selection fold (round-6; same expression, identical values)
-        .withColumn("_norm", _TX.norm_surface("_surface"))
     )
     turns = admissible(transcripts).select(
         "conv_id", "turn_idx", _word_tokens("text").alias("_toks")
@@ -309,14 +304,11 @@ def extract_mentions_join(
             F.array_join(F.slice("_toks", F.col("_p") + 1, F.col("_ntok")), " ")
             == F.col("_skey")
         )
-        .select("conv_id", "turn_idx", "_p", "_ntok", "_surface", "_norm")
+        .select("conv_id", "turn_idx", "_p", "_ntok", "_surface")
     )
     picked = (
         cand.groupBy("conv_id", "turn_idx")
         .agg(
-            # _norm is LAST in the sort struct: rows tying on (p, neglen, n,
-            # s) are the same surface, hence the same norm — sort order (and
-            # therefore the greedy selection) is unchanged from round 5
             F.array_sort(
                 F.collect_list(
                     F.struct(
@@ -324,7 +316,6 @@ def extract_mentions_join(
                         (-F.col("_ntok")).alias("neglen"),
                         F.col("_ntok").alias("n"),
                         F.col("_surface").alias("s"),
-                        F.col("_norm").alias("norm"),
                     )
                 )
             ).alias("_ms")
@@ -336,28 +327,26 @@ def extract_mentions_join(
                 "_ms",
                 F.struct(
                     F.lit(0).alias("cur"),
-                    F.array().cast("array<struct<s:string,norm:string>>").alias("acc"),
+                    F.array().cast("array<string>").alias("acc"),
                 ),
                 lambda st, m: F.when(
                     m["p"] >= st["cur"],
                     F.struct(
                         (m["p"] + m["n"]).alias("cur"),
-                        F.array_append(
-                            st["acc"], F.struct(m["s"].alias("s"), m["norm"].alias("norm"))
-                        ).alias("acc"),
+                        F.array_append(st["acc"], m["s"]).alias("acc"),
                     ),
                 ).otherwise(st),
             )["acc"].alias("_sel"),
         )
     )
-    return picked.select(
-        "conv_id", "turn_idx", F.explode("_sel").alias("m")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("m.s").alias("surface"),
-        F.col("m.norm").alias("norm_surface"),
+    sel = picked.select("conv_id", "turn_idx", F.explode("_sel").alias("surface"))
+    # norm once per DISTINCT selected surface, after the fold: at most
+    # min(|dictionary|, |mentions|) evaluations of the reflective NFC call,
+    # never one per dictionary entry
+    norms = sel.select("surface").distinct().select(
+        "surface", TX.norm_surface("surface").alias("norm_surface")
     )
+    return sel.join(norms, "surface").select("conv_id", "turn_idx", "surface", "norm_surface")
 
 
 def code_table_triples(code_tables: DataFrame, ns: str = NS) -> DataFrame:

@@ -23,10 +23,11 @@ def flatten_tree(
     parent accumulator. Returns (id, parent_id, depth, node) where node is
     the struct minus its children.
 
-    Each round explodes one level; terminates when a level is empty (or
-    max_depth as a runaway guard). Depth-bounded loops are the Spark shape
-    for recursion: real document trees are shallow, so this is O(depth)
-    narrow stages, not O(nodes) driver calls.
+    Each round explodes one level; terminates when a level is empty.
+    Depth-bounded loops are the Spark shape for recursion: real document
+    trees are shallow, so this is O(depth) narrow stages, not O(nodes)
+    driver calls. Raises if the tree is deeper than ``max_depth`` (a node
+    at depth max_depth still has children) rather than truncating it.
     """
     level = df.select(
         F.col(id_col).alias("id"),
@@ -36,16 +37,16 @@ def flatten_tree(
         F.col(children_col).alias("_kids"),
     )
     out = level.drop("_kids")
-    for depth in range(1, max_depth + 1):
+    for depth in range(1, max_depth + 2):
+        # checkpointed: each level's plan stays one level deep
         kids = level.filter(F.size("_kids") > 0).select(
             F.col("id").alias("parent_id"), F.explode("_kids").alias("_k"), F.lit(depth).alias("depth")
-        )
+        ).localCheckpoint()
         if kids.isEmpty():
             break
-        # nested levels use the SAME configurable column names as the root
-        # (a custom id_col/children_col used to hit hardcoded 'id'/'children'
-        # below depth 0: AnalysisException for the id, silently-dropped
-        # grandchildren for the children)
+        if depth > max_depth:
+            raise RuntimeError(f"flatten_tree: tree deeper than max_depth={max_depth}")
+        # nested levels use the same configurable column names as the root
         has_kids = children_col in [f.name for f in kids.schema["_k"].dataType.fields]
         level = kids.select(
             F.col(f"_k.{id_col}").alias("id"),
@@ -71,7 +72,8 @@ def rollup_content(
     ``completeContent`` accumulation): each node's complete content = its own
     + all descendants', ordered by id. Implemented by propagating each
     node's content up to every ancestor via iterative parent joins (depth-
-    bounded), then grouping per ancestor."""
+    bounded), then grouping per ancestor. Raises if the tree is deeper than
+    ``max_depth`` rather than dropping the deeper ancestors."""
     edges = nodes.select(F.col(id_col).alias("child"), F.col(parent_col).alias("anc")).filter(
         F.col("anc").isNotNull()
     )
@@ -84,11 +86,14 @@ def rollup_content(
             frontier.join(step, "anc")
             .select(F.col("child"), F.col("anc2").alias("anc"))
             .exceptAll(closure)
+            .localCheckpoint()  # the next frontier: keeps each round's plan one join deep
         )
         if nxt.isEmpty():
             break
         closure = closure.unionByName(nxt).localCheckpoint()
         frontier = nxt
+    else:
+        raise RuntimeError(f"rollup_content: tree deeper than max_depth={max_depth}")
     contrib = closure.unionByName(
         nodes.select(F.col(id_col).alias("child"), F.col(id_col).alias("anc"))
     )

@@ -15,7 +15,8 @@ Scale notes (the plan at 1000 executors):
   broadcasts the surface index; a hot surface form is absorbed by AQE
   skew-join + the two-phase dedup.
 * canonicalize iterates joins over the alias-edge relation (entity-sized,
-  not turn-sized) with per-round checkpoints to cut lineage.
+  not turn-sized), one checkpointing action per round; the label side is
+  broadcast while it is under ``broadcast_map_max_rows``.
 * materialize's single big shuffle is the set-semantics dedup, partitioned
   by the triple key — AQE handles skew; output re-buckets by conv_id.
 """
@@ -51,9 +52,10 @@ class Pipeline:
         self.catalog = Catalog(spark, warehouse, n_buckets=n_buckets)
         self.registry = LineageRegistry(warehouse)
         self.ns = ns
-        # canonical-map rewrite policy: broadcast the map only below this
-        # row count; above it (entity-scale maps at 10^12 turns can exceed
-        # any broadcast budget) fall back to a shuffle join that AQE plans
+        # broadcast policy for the canonical map's rewrite join and for the
+        # label side of connected components: broadcast only below this row
+        # count; above it (entity-scale maps at 10^12 turns can exceed any
+        # broadcast budget) fall back to a shuffle join that AQE plans
         self.broadcast_map_max_rows = broadcast_map_max_rows
 
     def _stage(self, run_id, name, fingerprint, force, compute, tables, metrics, bucket_cols=None):
@@ -144,9 +146,9 @@ class Pipeline:
                         for r in dictionary.select(F.explode("alt_labels").alias("a")).collect()
                     ]
                 # one broadcast per run: the surface list ships once per
-                # executor (not once per task via closure); the scanner
-                # (regex below AC_THRESHOLD surfaces, Aho-Corasick automaton
-                # above) is built once per executor process from it
+                # executor (not once per task via closure); above
+                # AC_THRESHOLD surfaces the Aho-Corasick automaton is built
+                # once per executor process from it
                 surfaces_bc = self.spark.sparkContext.broadcast(list(surfaces))
             norm = cat.read("transcripts_norm")
             triples = EX.extract_triples(norm, ns=self.ns)
@@ -202,7 +204,7 @@ class Pipeline:
             if alias_edges is None:
                 empty = self.spark.createDataFrame([], "node_id string, canonical_id string")
                 return {"canonical_map": empty, "triples_sameas": CN.sameas_triples(empty, ns=self.ns)}
-            cm = CN.connected_components(alias_edges)
+            cm = CN.connected_components(alias_edges, broadcast_max_rows=self.broadcast_map_max_rows)
             return {
                 "canonical_map": cm,
                 "triples_sameas": CN.sameas_triples(cm, ns=self.ns),

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """60% of physical RAM, in whole GB. A heap larger than the machine grows
+    until the kernel kills the JVM; the rest holds the JVM's off-heap memory,
+    the Python workers and the page cache."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(ram * 0.6) >> 30)}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "anything2rdf_spark",
@@ -43,7 +51,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # local mode = driver-only: the driver heap is the whole cluster's
         # memory; size it to the machine, not the default 1g (guide §Session)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()))
         # throughput GC: measured ~15% faster than G1 on codegen-heavy
         # string workloads in this environment. SPARK_GC_OPTS overrides —
         # e.g. capping ParallelGCThreads below the (oversubscribed)

@@ -43,8 +43,9 @@ def main(argv: list[str] | None = None) -> int:
         dest="mention_engine",
         choices=["scan", "join"],
         default="scan",
-        help="scan = broadcast dictionary + Arrow regex/Aho-Corasick; "
-        "join = token-index join for dictionaries too large to broadcast",
+        help="scan = broadcast dictionary list: a native JVM scan up to 256 "
+        "surfaces, an Arrow Aho-Corasick UDF above; join = token-index join "
+        "for dictionaries too large to broadcast",
     )
     ap.add_argument(
         "--broadcast-map-max-rows",
@@ -99,7 +100,8 @@ def main(argv: list[str] | None = None) -> int:
         force=args.force,
         mention_engine=args.mention_engine,
     )
-    metrics["n_triples"] = pipe.triples().count()
+    # parquet footers only: no Spark job, no scan of the output
+    metrics["n_triples"] = pipe.catalog.row_count("triples")
     print(json.dumps(metrics))
     spark.stop()
     return 0

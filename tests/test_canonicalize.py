@@ -2,6 +2,7 @@
 diamond, self-loop, 2-cycle, 1000-node component, isolated nodes) against a
 pure-Python union-find oracle."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from anything2rdf_spark import NS, OWL_SAMEAS
@@ -46,6 +47,41 @@ def test_connected_components_iteration_bound(spark):
         CN.connected_components(edges, max_iter=16)
     except RuntimeError as e:  # pragma: no cover
         raise AssertionError("pointer jumping failed to converge in 16 rounds") from e
+
+
+def test_connected_components_non_convergence_raises(spark):
+    edges = synth.alias_edges(spark, big_chain=1000)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        CN.connected_components(edges, max_iter=1)
+
+
+def test_connected_components_job_count(spark):
+    """One action per round plus broadcast label sides: the 1000-node chain
+    takes at most this many Spark jobs (it took 83 when each round ran a
+    separate convergence check and AQE sort-merge joins)."""
+    sc = spark.sparkContext
+    edges = synth.alias_edges(spark, big_chain=1000)
+    sc.setJobGroup("cc_job_count", "connected components job count")
+    try:
+        CN.connected_components(edges).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_job_count")) <= 38
+
+
+def test_connected_components_shuffle_path_and_null_nodes(spark):
+    """Above ``broadcast_max_rows`` the label joins shuffle, with the same
+    output; a NULL endpoint is a node of its own with a NULL label."""
+    edges = synth.alias_edges(spark, big_chain=50).unionByName(
+        spark.createDataFrame([("x", None), (None, "y"), ("x", "z")], "src_id string, dst_id string")
+    )
+    bc = {tuple(r) for r in CN.connected_components(edges).collect()}
+    sj = {tuple(r) for r in CN.connected_components(edges, broadcast_max_rows=0).collect()}
+    assert bc == sj
+    assert (None, None) in bc and ("x", "x") in bc and ("z", "x") in bc and ("y", "y") in bc
+    expected = py_union_find([(r["src_id"], r["dst_id"]) for r in synth.alias_edges(spark, big_chain=50).collect()])
+    assert {k: v for k, v in bc if k in expected} == expected
 
 
 def test_sameas_triples(spark):

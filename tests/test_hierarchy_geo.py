@@ -118,6 +118,45 @@ def test_statute_stack_hierarchy(spark):
     assert len(part_of) == 4  # every non-root node links to its parent
 
 
+def _path_tree(spark, depth):
+    """One root-to-leaf path whose leaf is at ``depth``, as flatten_tree
+    input."""
+    t = "struct<id:string>"
+    v = (f"n{depth}",)
+    for k in range(depth - 1, 0, -1):
+        t = f"struct<id:string,children:array<{t}>>"
+        v = (f"n{k}", [v])
+    return spark.createDataFrame([("n0", [v])], f"id string, children array<{t}>")
+
+
+def _path_nodes(spark, depth):
+    return spark.createDataFrame(
+        [(f"n{k}", f"n{k - 1}" if k else None, f"c{k:02d}") for k in range(depth + 1)],
+        "id string, parent_id string, content string",
+    )
+
+
+def test_hierarchy_deeper_than_max_depth_raises(spark):
+    """A tree of depth 33 exceeds the default max_depth=32: both iterative
+    operators raise instead of silently truncating."""
+    with pytest.raises(RuntimeError, match="max_depth=32"):
+        H.flatten_tree(_path_tree(spark, 33))
+    with pytest.raises(RuntimeError, match="max_depth=32"):
+        H.rollup_content(_path_nodes(spark, 33))
+
+
+def test_hierarchy_max_depth_boundary(spark):
+    """A tree exactly max_depth deep is complete; one level more raises."""
+    out = {r["id"]: r["depth"] for r in H.flatten_tree(_path_tree(spark, 4), max_depth=4).collect()}
+    assert out == {f"n{k}": k for k in range(5)}
+    got = {r["id"]: r["complete_content"] for r in H.rollup_content(_path_nodes(spark, 4), max_depth=4).collect()}
+    assert got["n0"] == "\n".join(f"c{k:02d}" for k in range(5))
+    with pytest.raises(RuntimeError):
+        H.flatten_tree(_path_tree(spark, 5), max_depth=4)
+    with pytest.raises(RuntimeError):
+        H.rollup_content(_path_nodes(spark, 5), max_depth=4)
+
+
 def test_flatten_tree_custom_column_names(spark):
     """id_col/children_col must apply below depth 0 too (they used to be
     hardcoded to 'id'/'children' for nested levels: AnalysisException for a

@@ -73,6 +73,22 @@ def test_dictionary_link_broadcasts(spark, transcripts):
     assert "Exchange hashpartitioning" not in p
 
 
+def test_mention_and_link_plans_have_no_python(spark, transcripts):
+    """With the synth dictionary (native mention engine) neither mention
+    extraction nor linking starts a Python worker: NFC is a JVM column."""
+    dictionary = synth.entity_dictionary(spark)
+    surfaces = dictionary.select(F.col("pref_label").alias("surface")).unionByName(
+        dictionary.select(F.explode("alt_labels").alias("surface"))
+    )
+    plans = [
+        plan(EX.extract_mentions(transcripts, synth.ALL_MENTION_NAMES)),
+        plan(EX.extract_mentions_join(transcripts, surfaces)),
+        plan(LK.link_mentions(EX.extract_mentions(transcripts, synth.ALL_MENTION_NAMES), dictionary)),
+    ]
+    for p in plans:
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
+
+
 def test_rewrite_triples_join_strategy_policy(spark):
     """broadcast_map=True plans a broadcast join; False plans a shuffle join
     (the entity-scale path where the canonical map exceeds broadcast range)."""

@@ -57,6 +57,33 @@ def test_nfc_normalize(spark):
     assert got[0] == "étude" and got[1] is None
 
 
+def test_nfc_matches_unicodedata(spark):
+    """The JVM (ICU) NFC column agrees with Python's unicodedata on
+    combining sequences, Hangul jamo, singletons and compatibility
+    characters that NFC must leave alone (characters whose normalization
+    is the same in both libraries' Unicode versions)."""
+    import unicodedata
+
+    samples = [
+        "e\u0301tude",             # combining acute
+        "a\u0308\u0301",           # stacked combining marks
+        "\u1e0b\u0323",            # canonical reordering of marks
+        "\u1100\u1161\u11a8",      # Hangul jamo L V T -> one syllable
+        "\u1112\u1161",            # Hangul jamo L V
+        "\u212b",                  # ANGSTROM SIGN singleton -> U+00C5
+        "\ufb01",                  # fi ligature: compatibility, unchanged
+        "\u2460",                  # circled one: compatibility, unchanged
+        "already \u00e9",
+        "",
+        None,
+    ]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(samples)], "i int, s string")
+    got = {r["i"]: r["v"] for r in df.select("i", TX.nfc_normalize("s").alias("v")).collect()}
+    for i, s in enumerate(samples):
+        want = None if s is None else unicodedata.normalize("NFC", s)
+        assert got[i] == want, (s, got[i], want)
+
+
 def test_norm_surface(spark):
     df = spark.createDataFrame([("  --Ada   LOVELACE!  ",)], "s string")
     got = df.select(TX.norm_surface("s").alias("v")).collect()[0]["v"]
